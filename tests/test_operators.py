@@ -638,3 +638,44 @@ def test_kmeans_separates_blobs(spark):
         by_parity[r["vec_id"] % 2].add(r["cluster"])
     assert by_parity[0] != by_parity[1]  # blobs land in different clusters
     assert len(by_parity[0]) == 1 and len(by_parity[1]) == 1
+
+
+def test_bloom_fragments_one_row_per_shard_across_batches(spark):
+    """Tiny Arrow batches make every shard span several batches, and AQE
+    coalesces several shards into one task: the streaming build must still
+    emit exactly one fragment per shard touched, bit-identical to a
+    single-process build, with no inserted URL probing 'new'."""
+    import numpy as np
+
+    from transmogrify_webcrawler_spark.operators.dedup import (
+        _np_hashes, _set_bits, bloom_probe, build_bloom_fragments,
+        with_bloom_hashes,
+    )
+    n_shards, nbytes = 8, 256
+    urls = spark.createDataFrame(
+        [(f"http://d{i % 5}.com/p/{i}.html",) for i in range(300)],
+        "url_canon string")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        frags_df = build_bloom_fragments(urls, n_shards, nbytes)
+        # fewer Python tasks than shards: sized by data, not shard count
+        assert frags_df.rdd.getNumPartitions() < n_shards
+        frags = frags_df.toPandas()
+        probed = bloom_probe(urls, frags_df, n_shards, nbytes).toPandas()
+        hashes = (with_bloom_hashes(urls, n_shards)
+                  .select("_sid", "_h1", "_h2").toPandas())
+    finally:
+        spark.conf.set(key, prev)
+
+    assert frags["shard_id"].is_unique
+    assert set(frags["shard_id"]) == set(hashes["_sid"])
+    assert frags["n_items"].sum() == 300
+    for sid, grp in hashes.groupby("_sid"):
+        want = np.zeros(nbytes, dtype=np.uint8)
+        _set_bits(want, *_np_hashes(grp))
+        row = frags[frags["shard_id"] == sid].iloc[0]
+        assert row["n_items"] == len(grp)
+        assert bytes(row["filter_bytes"]) == want.tobytes()
+    assert len(probed) == 300 and probed["_maybe_seen"].all()

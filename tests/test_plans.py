@@ -3,6 +3,8 @@ want (predicate pushdown, rank pushdown, top-k without full sort, partial
 aggregation, broadcast dims). A refactor that silently degrades one of these
 shapes fails here long before it shows up in a benchmark."""
 
+import re
+
 import pyspark.sql.functions as F
 
 
@@ -218,3 +220,23 @@ def test_cdx_index_has_no_global_single_partition_stage(spark):
         "url string").repartition(6)
     plan = cdx_index(df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange SinglePartition" not in plan
+
+
+def test_bloom_fragment_build_sized_by_data_not_shard_count(spark):
+    """Each Python task has a fixed cost, so the fragment build must let
+    AQE size its stage from the data: a by-column shuffle on the shard id
+    (never a fixed n_shards-way repartition) and a sort on the shard id
+    feeding the streaming MapInPandas build."""
+    from transmogrify_webcrawler_spark.operators.dedup import (
+        build_bloom_fragments)
+    urls = spark.createDataFrame(
+        [(f"http://a.com/p/{i}",) for i in range(50)], "url_canon string")
+    plan = (build_bloom_fragments(urls, n_shards=32, nbytes=128)
+            ._jdf.queryExecution().executedPlan().toString())
+    assert re.search(
+        r"Exchange hashpartitioning\(_sid#\d+, \d+\), REPARTITION_BY_COL",
+        plan)
+    assert "REPARTITION_BY_NUM" not in plan
+    lines = plan.splitlines()
+    at = next(i for i, ln in enumerate(lines) if "MapInPandas" in ln)
+    assert re.search(r"Sort \[_sid#\d+ ASC", lines[at + 1])

@@ -61,8 +61,9 @@ def pagerank_fixed(edges: DataFrame, iterations: int = 3,
                    src: str = "src", dst: str = "dst",
                    n_nodes: int | None = None) -> DataFrame:
     """Fixed-point PageRank over a directed edge list; multi-edges collapse
-    to simple edges. Returns (node BIGINT, rank_fp BIGINT) with
-    rank ~= rank_fp / 10^12.
+    to simple edges. Returns (node BIGINT, rank_fp DOUBLE) with
+    rank ~= rank_fp / 10^12; rank_fp is an integer computed in BIGINT and
+    emitted as DOUBLE (exact, < 2^53).
 
     Update rule, all-integer (`DIV` = floor division on positive longs):
         r0(v)      = SCALE DIV N
@@ -277,7 +278,8 @@ def hits_fixed(edges: DataFrame, iterations: int = 2,
     table shuffles; the normalization max is a 1-row agg joined back via
     crossJoin(broadcast) — no driver round-trip.
 
-    Returns (node BIGINT, hub_fp BIGINT, auth_fp BIGINT)."""
+    Returns (node BIGINT, hub_fp DOUBLE, auth_fp DOUBLE): integer scores
+    computed in BIGINT and emitted as DOUBLE (exact, < 2^53)."""
     e = (_edges_long(edges, src, dst)
          .repartition("src").sortWithinPartitions("src").persist())
     nodes = (e.select(F.col("src").alias("node"))

@@ -15,8 +15,8 @@ Scale shape (the 10^10-URL story):
 - NOTHING round-trips through the driver per wave: robots stays a DataFrame
   (broadcast only under a row-count guard), the Bloom seen-set is a snapshot
   TABLE probed via a shard-routed cogroup (operators/dedup.py), and every
-  row count the loop needs comes from Observations attached to the commit
-  writes themselves (manifest["counts"]) — zero dedicated count() jobs.
+  row count the loop needs is read from the parquet footers of the files
+  the commit wrote (manifest["counts"]) — zero dedicated count() jobs.
 - Everything except the pinned pandas UDFs is Catalyst: filters are Column
   exprs (pushdown-able), the fat `html BINARY` column is pruned before every
   shuffle, the hot-domain budget is salted, the global top-k is
