@@ -187,8 +187,8 @@ def engine_gate(repeats: int = 3) -> dict:
 ## Round-5 {tag}: ENGINE 2->8 with same-session kernel ceiling
 
 Measured {time.strftime('%Y-%m-%d')} (round 5), one session, shipped ENGINE
-shape (per-wave fetch, bloom ON, pipeline_commits OFF — the engine default
-the bench also defaults to), median-of-{repeats} per point:
+shape (per-wave fetch, bloom ON, synchronous commits — the engine's only
+wave loop), median-of-{repeats} per point:
 
 | measurement | value |
 | --- | --- |
@@ -353,8 +353,8 @@ recovers only ~0.05 efficiency against a parser-kernel ceiling
 measured at 0.91 (round-3 session) and 0.67 (this session's noisier
 box) — far below either bound.
 The residual is engine-on-this-box (shuffle serialization / Arrow / GC
-memory-bandwidth + per-wave fixed cost). Corroboration: pipelined commits
-(pipeline_commits=True) hide ALL commit wall (commit_join ~0 s) yet total
+memory-bandwidth + per-wave fixed cost). Corroboration: a pipelined-commit
+loop (since removed) hid ALL commit wall (commit_join ~0 s) yet total
 got WORSE (187 -> 199 s at local[32]) — commit tasks do parquet encoding
 on the same cores; no idle resource exists to overlap into on one box.
 Recorded decision: stop chasing 8->32 on this VM; the N->4N gate
@@ -362,8 +362,8 @@ stands on the 2->8 pairing (round-3 session: ENGINE 0.804 / BULK
 0.802; round-4 re-run on a visibly noisier box — the NO-SPARK parser
 kernel's own 8->32 retention fell 0.91 -> 0.67 between sessions —
 BULK 0.984 / ENGINE 0.703 median-of-3, i.e. ~77% of that session's
-0.91 2->8 kernel ceiling); the pipelined-commit switch targets
-clusters with network-bound commit flush.
+0.91 2->8 kernel ceiling); the pipelined-commit switch was removed,
+since one box gives it no idle resource to overlap into.
 
 Variance disclosure (shared VM, host steal): identical runs measured this
 session differ by up to ~1.7x wall (e.g. the DEFAULT sf0.1 bench crawl ran

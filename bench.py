@@ -217,11 +217,6 @@ def bench_crawl(spark, n_pages: int, body_words: int = 30) -> dict:
                                           "1e18")),
         arrow_batch=int(os.environ.get("SPARK_GRAFT_ARROW_BATCH", "2048")),
         fetch_mode=os.environ.get("SPARK_GRAFT_FETCH_MODE", "per-wave"),
-        # default "0" = the SHIPPED engine default (pipeline_commits=False);
-        # the pipelined loop is measured slower on this one box (187->199 s,
-        # BENCH/BASELINE.md round-4 A/B) — the bench must measure what ships.
-        # Export SPARK_GRAFT_PIPELINE=1 for the cluster-shaped experiment arm.
-        pipeline_commits=os.environ.get("SPARK_GRAFT_PIPELINE", "0") == "1",
     )
     crawler = SparkCrawler(spark, store, cfg)
     t0 = time.time()

@@ -6,8 +6,9 @@ Usage:
   python bench_extra.py q1 q2 ...      # time the named queries (noop sink)
   python bench_extra.py --all          # every BENCH_QUERIES entry
   python bench_extra.py --explain q1   # write plans/r06/<q>_<tag>.txt
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0 — the driver's
-     escalated measurement scale), SPARK_GRAFT_CPUS, REPEATS, TAG.
+Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
+     SPARK_GRAFT_CPUS (default: the CPUs this process may use), REPEATS,
+     TAG.
 Prints one JSON line: {"sf": ..., "queries": {name: median}, "spread": {...}}
 """
 
@@ -20,8 +21,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS")
+           or len(os.sched_getaffinity(0)))
 REPEATS = max(int(os.environ.get("REPEATS", "3")), 1)
 TAG = os.environ.get("TAG", "before")
 REPO = os.path.dirname(os.path.abspath(__file__))

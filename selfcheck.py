@@ -60,7 +60,8 @@ def main():
     from transmogrify_webcrawler_spark import harness
 
     only = set(sys.argv[1:])
-    spark = build_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = build_spark(int(os.environ.get("SPARK_GRAFT_CPUS")
+                            or len(os.sched_getaffinity(0))))
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:

@@ -176,43 +176,19 @@ def test_crawler_restores_session_confs(spark, pages_df, corpus):
     shutil.rmtree(store, ignore_errors=True)
 
 
-def test_checkpoint_dirs_reaped_per_wave(spark, pages_df, corpus,
-                                         oracle_result, tmp_path):
-    """Round-4 ADVICE: Spark never deletes reliable df.checkpoint() files
-    (only the GC-tied cleaner conf, off by default) and unpersist() on a
-    checkpointed frame is a no-op — so the per-wave checkpoints of a long
-    crawl grew the checkpoint dir without bound. The crawler now rotates a
-    subdir per wave and reaps retired ones with a 2-wave lag; after run()
-    at most the session's active subdir plus the user's original one
-    remain, and the crawl is still byte-identical to the oracle."""
-    from transmogrify_webcrawler_spark.plans.crawl import (
-        SparkCrawlConfig, SparkCrawler,
-    )
-
-    sc = spark.sparkContext
-    base = tmp_path / "ckpt"
-    sc.setCheckpointDir(str(base))
-    try:
-        ocfg = oracle_result["cfg"]
-        cfg = SparkCrawlConfig(
-            wave_size=ocfg.wave_size,
-            per_domain_budget=ocfg.per_domain_budget, maxsize=ocfg.maxsize,
-            ignore=ocfg.ignore, use_bloom=True, n_bloom_shards=8,
-            n_salts=4, pipeline_commits=True,
-        )
-        crawler = SparkCrawler(spark, str(tmp_path / "ckpt_store"), cfg)
-        final = crawler.run(pages_df, corpus["seeds"])
-        got = {r["url_canon"] for r in final.select("url_canon").collect()}
-        assert got == {r["url_canon"] for r in oracle_result["crawled"]}
-        waves = crawler.store.current_wave() + 1
-        assert waves >= 3  # rotation must actually have happened
-        leftover = sorted(p for p in base.iterdir() if p.is_dir())
-        # user's original UUID dir + at most the session's active rotation
-        assert len(leftover) <= 2, leftover
-        assert crawler._ckpt_dirs == [] or len(crawler._ckpt_dirs) == 1
-    finally:
-        # un-configure the checkpoint dir so later tests on the shared
-        # session keep the localCheckpoint/persist paths they expect
-        # (package-private Scala var, reachable from py4j)
-        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
-            getattr(sc._jvm.scala.Option, "empty")())
+def test_checkpoint_dirs_reaped_per_wave(range_topk_ckpt_crawl):
+    """Spark never deletes reliable df.checkpoint() files (only the GC-tied
+    cleaner conf, off by default) and unpersist() on a checkpointed frame is
+    a no-op — so the per-wave checkpoints of a long crawl would grow the
+    checkpoint dir without bound. The crawler rotates a subdir per wave and
+    reaps the retired ones. Checked after EVERY wave of the range_topk crawl
+    (shared with test_plans' identity test): only the user's original subdir
+    and the active one remain."""
+    per_wave = range_topk_ckpt_crawl["per_wave"]
+    assert len(per_wave) >= 3  # rotation must actually have happened
+    # range_topk really checkpointed into the rotated dirs
+    assert any(n_files for _, n_files in per_wave), per_wave
+    assert all(n_dirs <= 2 for n_dirs, _ in per_wave), per_wave
+    leftover = range_topk_ckpt_crawl["leftover"]
+    assert len(leftover) <= 2, leftover
+    assert len(range_topk_ckpt_crawl["ckpt_dirs"]) <= 1

@@ -107,33 +107,3 @@ def test_metrics_match_oracle_totals(spark, spark_result, oracle_result):
         for k in ("fetched", "parsed", "skipped_robots", "skipped_maxsize",
                   "skipped_notfound", "bytes", "skipped_ignore"):
             assert g[k] == om[k], (om["wave"], k, g[k], om[k])
-
-
-def test_pipelined_crawl_identical(spark, pages_df, corpus, oracle_result,
-                                   spark_result, tmp_path):
-    """pipeline_commits=True (commit IO overlapped with the next wave's
-    compute, in-memory state threading, lineage truncation) must produce
-    the EXACT same crawl as the legacy sequential loop AND the oracle:
-    same set, same sortorder, byte-identical text, same seen set."""
-    ocfg = oracle_result["cfg"]
-    cfg = SparkCrawlConfig(
-        wave_size=ocfg.wave_size, per_domain_budget=ocfg.per_domain_budget,
-        maxsize=ocfg.maxsize, ignore=ocfg.ignore, use_bloom=True,
-        n_bloom_shards=8, n_salts=4, pipeline_commits=True,
-    )
-    crawler = SparkCrawler(spark, str(tmp_path / "pipe_store"), cfg)
-    final = crawler.run(pages_df, corpus["seeds"])
-    got = {r["url_canon"]: r.asDict() for r in final.collect()}
-    legacy = spark_result["rows"]
-    assert set(got) == set(legacy)
-    for uc, row in legacy.items():
-        assert got[uc]["sortorder"] == row["sortorder"], uc
-        assert got[uc]["extracted_text"] == row["extracted_text"], uc
-        assert got[uc]["backlinks"] == row["backlinks"], uc
-    from transmogrify_webcrawler_spark.plans.crawl import SEEN_SCHEMA
-    sa = {r["url_canon"] for r in
-          crawler.store.read(spark, "seen", SEEN_SCHEMA).collect()}
-    sb = {r["url_canon"] for r in
-          spark_result["crawler"].store.read(spark, "seen",
-                                             SEEN_SCHEMA).collect()}
-    assert sa == sb

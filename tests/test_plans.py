@@ -75,27 +75,15 @@ def test_range_topk_no_single_task_merge(spark):
         c.unpersist()
 
 
-def test_crawl_with_range_topk_identical(spark, pages_df, corpus,
-                                         oracle_result, tmp_path):
+def test_crawl_with_range_topk_identical(range_topk_ckpt_crawl,
+                                         oracle_result):
     """Forcing the range-partitioned top-k through the whole crawl loop
     (topk_single_pass_limit=0) yields the exact oracle crawl — set AND
-    sortorder."""
-    from transmogrify_webcrawler_spark.plans.crawl import (
-        SparkCrawlConfig, SparkCrawler,
-    )
-
-    ocfg = oracle_result["cfg"]
-    cfg = SparkCrawlConfig(
-        wave_size=ocfg.wave_size, per_domain_budget=ocfg.per_domain_budget,
-        maxsize=ocfg.maxsize, ignore=ocfg.ignore, use_bloom=False,
-        n_salts=4, topk_single_pass_limit=0,
-    )
-    crawler = SparkCrawler(spark, str(tmp_path / "store"), cfg)
-    final = crawler.run(pages_df, corpus["seeds"])
-    got = {r["url_canon"]: r["sortorder"] for r in final.collect()}
+    sortorder. The crawl (shared with the checkpoint reaping test) runs
+    with a checkpoint dir set, so range_topk checkpoints every wave."""
     want = {r["url_canon"]: r["sortorder"]
             for r in oracle_result["crawled"]}
-    assert got == want
+    assert range_topk_ckpt_crawl["sortorder"] == want
 
 
 def test_dedup_exact_has_partial_aggregation(spark):

@@ -100,26 +100,3 @@ def test_torn_commit_invisible(spark, pages_df, corpus, small_cfg, tmp_path):
     assert "wave=000099" not in json.dumps(
         c.store.current_manifest()["tables"])
     assert crawled.count() > 0  # reads fine, orphan ignored
-
-
-def test_pipelined_kill_and_resume_crossover(spark, pages_df, corpus,
-                                             small_cfg, tmp_path):
-    """Kill a PIPELINED crawl mid-run, resume with the legacy loop (and
-    vice versa) — manifests publish in order either way, so any mix must
-    converge to the same final tables as an uninterrupted legacy run."""
-    full = SparkCrawler(spark, str(tmp_path / "full2"), small_cfg)
-    want = _rows(full.run(pages_df, corpus["seeds"]))
-
-    pipe_cfg = dataclasses.replace(small_cfg, pipeline_commits=True)
-    killed = dataclasses.replace(pipe_cfg, max_waves=3)
-    a = SparkCrawler(spark, str(tmp_path / "x"), killed)
-    a.run(pages_df, corpus["seeds"])
-    assert a.store.current_wave() == 2
-    b = SparkCrawler(spark, str(tmp_path / "x"), small_cfg)  # legacy resume
-    assert _rows(b.run(pages_df, corpus["seeds"])) == want
-
-    killed2 = dataclasses.replace(small_cfg, max_waves=3)
-    c = SparkCrawler(spark, str(tmp_path / "y"), killed2)
-    c.run(pages_df, corpus["seeds"])
-    d = SparkCrawler(spark, str(tmp_path / "y"), pipe_cfg)  # pipelined resume
-    assert _rows(d.run(pages_df, corpus["seeds"])) == want

@@ -187,8 +187,10 @@ def test_reciprocal_links_counts(spark):
     from transmogrify_webcrawler_spark.operators.graph import (
         reciprocal_links)
 
+    # the repeated (1, 2) and (2, 1) rows must not count twice: the counts
+    # rely on _edges_long's distinct()
     edges = spark.createDataFrame(
-        [(1, 2), (2, 1), (1, 3), (3, 4), (4, 3), (3, 5)],
+        [(1, 2), (2, 1), (1, 3), (3, 4), (4, 3), (3, 5), (1, 2), (2, 1)],
         "src long, dst long")
     got = {r["node"]: (r["n_out"], r["n_reciprocal"], r["reciprocal_pct"])
            for r in reciprocal_links(edges).collect()}

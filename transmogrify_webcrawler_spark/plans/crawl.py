@@ -138,24 +138,6 @@ class SparkCrawlConfig:
     # beyond this row count it becomes a plain shuffle join on
     # registered_domain (web scale: one row per domain = tens of millions)
     robots_broadcast_rows: int = 4_000_000
-    # overlap each wave's snapshot-commit IO with the NEXT wave's compute:
-    # the commit runs on a single background worker (manifest publishes
-    # stay strictly ordered and atomic — crash/resume semantics unchanged,
-    # byte-identity + resume pytest run through this path too), while the
-    # driver immediately builds and materializes wave N+1 from in-memory
-    # state (frontier'/seen'/bloom fragments are the same persisted
-    # DataFrames the commit is writing). MEASURED on this box (same-session
-    # A/B, ENGINE shape, 50k heavy pages, local[32]): the overlap WORKS
-    # (commit_join ~0 s — all ~41 s of commit wall rides behind the next
-    # wave's compute) but total wall does NOT improve (187 -> 199 s),
-    # because on a single machine the commit is not dead IO: its tasks do
-    # parquet encoding of the fat text column on the same 32 cores, so
-    # hiding the commit inflates the foreground compute by the same
-    # amount, plus checkpoint bookkeeping. Default OFF for that reason.
-    # The switch is the right one to flip on a real cluster where the
-    # commit flush is network/object-store-bound (genuinely idle
-    # executors) — the dataflow is identical and fully tested either way.
-    pipeline_commits: bool = False
     # 'latest capture wins' dim: broadcast the skinny winners table into the
     # corpus join-back while it fits — the alternative is a sort-merge join
     # that EXCHANGES the fat html column (measured: the 12 GB shuffle write
@@ -285,7 +267,7 @@ class SparkCrawler:
         self.timings: list[dict] = []  # per-wave step wall times (lineage)
         self.write_timings: list[dict] = []  # per-table commit write times
         self._winners: DataFrame | None = None  # pinned dedup dim (skinny)
-        self._ckpt_dirs: list = []  # (wave, dir) rotations we created
+        self._ckpt_dirs: list = []  # checkpoint subdirs we rotated into
         # reusable unresolved Column/WindowSpec objects (exprcache.ecached):
         # build_wave constructs ~1,900 expression nodes per wave, each a
         # Py4J round trip — measured 1.9 s/wave of pure driver time
@@ -513,13 +495,11 @@ class SparkCrawler:
                    shards: DataFrame | None, pages_prepared: DataFrame,
                    robots: DataFrame, domain_budgets: DataFrame | None,
                    roots: tuple[str, ...], crawled_count: int, budget: int,
-                   bloom_rebuild: bool = False, truncate=None) -> dict:
+                   bloom_rebuild: bool = False) -> dict:
         """Construct ONE wave's full dataflow (selection -> fetch ->
         extraction -> link pipeline -> frontier update -> metrics) against
         caller-supplied state DataFrames, WITHOUT committing. Returns the
-        handle dict `_commit` writes — and that the pipelined loop
-        (`_wave_loop_pipelined`) materializes while the previous wave's
-        commit is still writing. Pure DAG construction plus persist()
+        handle dict `_commit` writes. Pure DAG construction plus persist()
         marks; the only Spark actions are inside wave_topk's scale path."""
         cfg = self.cfg
         ex = self._exprs  # wave-invariant expression cache (see __init__)
@@ -707,20 +687,7 @@ class SparkCrawler:
                 F.col("new_refs").alias("n_refs"),
                 registered_domain_udf("url_canon")
                 .alias("registered_domain"),
-            ]))  # consumed by frontier', seen', and the bloom update
-        if truncate is not None:
-            # pipelined loop: new_entries' plan embeds the seen chain,
-            # whose plan embeds the previous wave's new_entries — an
-            # UNBOUNDED nesting (the seen re-anchor swaps the top-level
-            # variable but not the plan captured inside this anti-join).
-            # Cutting lineage right here roots seen', the bloom fragments
-            # and frontier' at a materialized RDD, so every wave's plan
-            # depth is one wave. (Eager: runs the wave's heavy pipeline —
-            # exactly the compute the loop wants overlapping the previous
-            # commit's IO.)
-            new_entries = truncate(new_entries)
-        else:
-            new_entries = new_entries.persist()
+            ])).persist()  # consumed by frontier', seen', the bloom update
 
         frontier_next = merged.unionByName(new_entries)
         seen_new = new_entries.select(
@@ -771,16 +738,12 @@ class SparkCrawler:
             crawled_new=crawled_new, links_new=links_new,
             ext_links=ext_links, errors=errors, seen_new=seen_new,
             metrics=metrics, frontier_next=frontier_next,
-            bloom_replace=None, bloom_append=None, new_frags=None,
+            bloom_replace=None, bloom_append=None,
         )
         if cfg.use_bloom:
-            # bloom update tables built HERE (not in _commit) so the
-            # pipelined loop can thread the SAME DataFrames into the next
-            # wave's probe while the commit writes them
             new_frags = build_bloom_fragments(
                 seen_new.select("url_canon"), cfg.n_bloom_shards,
                 cfg.bloom_shard_bytes, exprs=ex)
-            w["new_frags"] = new_frags
             compact = (bloom_rebuild
                        or wave % cfg.bloom_compact_every
                        == cfg.bloom_compact_every - 1)
@@ -796,16 +759,17 @@ class SparkCrawler:
     def run_wave(self, wave: int, pages_prepared: DataFrame,
                  robots: DataFrame, domain_budgets: DataFrame | None,
                  roots: tuple[str, ...], crawled_count: int) -> int:
-        """Legacy synchronous wave (pipeline_commits=False): state read
-        from the store, commit blocks, then cleanup. One wave end-to-end."""
+        """One wave end-to-end: state read from the store, the wave built,
+        committed (blocking), then its caches and checkpoints released.
+        Returns the number of rows the wave selected (0 = nothing to do)."""
         cfg, spark = self.cfg, self.spark
         budget = min(cfg.wave_size, cfg.max_pages - crawled_count)
         if budget <= 0:
             return 0
         # range_topk checkpoints into the active dir when one is set; give
-        # this wave its own subdir and reap earlier waves' (commit below is
-        # synchronous, so wave-1's files are unreferenced once it returns)
-        self._rotate_ckpt_dir(wave)
+        # this wave its own subdir and reap earlier waves' (the commit below
+        # is synchronous, so their files are unreferenced by now)
+        self._rotate_ckpt_dir()
         t_build = time.time()
         frontier = self.store.read(spark, "frontier",
                                    FRONTIER_SCHEMA).persist()
@@ -822,41 +786,23 @@ class SparkCrawler:
         counts = manifest["counts"]
         self._unpersist_wave(w)
         frontier.unpersist()
-        self._reap_ckpt_dirs(before_wave=wave)
+        self._reap_ckpt_dirs()
         # every selected row lands in exactly one of crawled/errors
         return counts["crawled"] + counts["errors"]
 
-    def _truncate(self, df: DataFrame) -> DataFrame:
-        """Cut lineage (pipelined loop): threaded state plans reference
-        their parents several times per wave (the frontier in selection,
-        the remaining anti-join and the candidate pipeline; seen inside
-        the new_entries anti-join), so uncut chains grow the logical tree
-        EXPONENTIALLY with wave count (measured: analyzer OOM by wave ~10
-        on a 300-page corpus; the legacy loop is immune because its store
-        re-read roots every wave at parquet). Reliable checkpoint when the
-        session has a checkpoint dir; else localCheckpoint — executor
-        block loss then fails the wave job loudly and the crawl resumes
-        from the last committed snapshot (the durable anchor), the same
-        coarse-grained recovery story as range_topk."""
-        sc = self.spark.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isDefined():
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
-    def _rotate_ckpt_dir(self, wave: int) -> None:
+    def _rotate_ckpt_dir(self) -> None:
         """Reliable checkpoint files are NEVER removed by Spark itself
         (only `spark.cleaner.referenceTracking.cleanCheckpoints`, off by
         default, ties them to GC; `unpersist()` on a checkpointed frame is
-        a no-op) — so a long crawl that checkpoints per wave grows the
-        checkpoint dir without bound. Bound it by rotation: each
+        a no-op) — so a long crawl whose range_topk checkpoints every wave
+        grows the checkpoint dir without bound. Bound it by rotation: each
         `setCheckpointDir(base)` call creates a fresh `base/<UUID>` subdir,
         so giving every wave its own subdir makes cleanup a recursive
-        delete of whole retired subdirs, no per-RDD file tracking. Dirs are
-        reaped with the same 2-wave lag as the persisted handles: wave k's
-        checkpoints are last READ by wave k+1's background commit (whose
-        input frontier lives in dir k), which has joined by the time wave
-        k+2 reaps. No-op when no checkpoint dir is configured
-        (localCheckpoint path)."""
+        delete of whole retired subdirs, no per-RDD file tracking. The
+        commit is synchronous, so once a wave returns nothing reads its
+        checkpoints and `_reap_ckpt_dirs` drops every dir but the active
+        one. No-op when no checkpoint dir is configured (range_topk then
+        persists instead)."""
         sc = self.spark.sparkContext
         opt = sc._jsc.sc().getCheckpointDir()
         if not opt.isDefined():
@@ -864,25 +810,21 @@ class SparkCrawler:
         base = (sc._jvm.org.apache.hadoop.fs.Path(opt.get())
                 .getParent().toString())
         sc.setCheckpointDir(base)
-        self._ckpt_dirs.append((wave, sc._jsc.sc().getCheckpointDir().get()))
+        self._ckpt_dirs.append(sc._jsc.sc().getCheckpointDir().get())
 
-    def _reap_ckpt_dirs(self, before_wave: int | None = None) -> None:
-        """Delete rotated checkpoint subdirs for waves < before_wave
-        (None = every rotation we created). The session's ACTIVE dir is
-        always kept so later user checkpoints on the same session still
-        have a home. Hadoop FileSystem delete, so object-store checkpoint
-        dirs reap the same way as file:/."""
+    def _reap_ckpt_dirs(self) -> None:
+        """Delete every rotated checkpoint subdir we created except the
+        session's ACTIVE one, so later user checkpoints on the same session
+        still have a home. Hadoop FileSystem delete, so object-store
+        checkpoint dirs reap the same way as file:/."""
         sc = self.spark.sparkContext
         opt = sc._jsc.sc().getCheckpointDir()
         active = opt.get() if opt.isDefined() else None
-        keep = []
-        for wv, d in self._ckpt_dirs:
-            if (before_wave is not None and wv >= before_wave) or d == active:
-                keep.append((wv, d))
-                continue
-            p = sc._jvm.org.apache.hadoop.fs.Path(d)
-            p.getFileSystem(sc._jsc.hadoopConfiguration()).delete(p, True)
-        self._ckpt_dirs = keep
+        for d in self._ckpt_dirs:
+            if d != active:
+                p = sc._jvm.org.apache.hadoop.fs.Path(d)
+                p.getFileSystem(sc._jsc.hadoopConfiguration()).delete(p, True)
+        self._ckpt_dirs = [d for d in self._ckpt_dirs if d == active]
 
     @staticmethod
     def _unpersist_wave(w: dict) -> None:
@@ -925,155 +867,6 @@ class SparkCrawler:
             # snapshots — which otherwise grow disk linearly with waves
             self.store.expire_snapshots(keep_last=cfg.expire_keep_last)
         return manifest
-
-    def _wave_loop_pipelined(self, wave: int, pages_prepared: DataFrame,
-                             robots: DataFrame,
-                             domain_budgets: DataFrame | None,
-                             roots: tuple[str, ...]) -> None:
-        """Pipelined wave loop: wave N's commit IO overlaps wave N+1's
-        compute (VERDICT r3 #2 — the per-wave commit floor was dead time
-        for 31 of 32 cores).
-
-        Shape: build wave N's DAG, MATERIALIZE its heavy intermediates in
-        the foreground (extraction via parsed, the next frontier, the
-        status counts — these Spark jobs run while wave N-1's commit is
-        still writing on the background worker), then join commit N-1,
-        re-anchor the exact-seen chain to the store it just published, and
-        submit commit N. One commit is ever in flight; manifests publish
-        in order through a single worker, so a crash still leaves the last
-        fully-committed wave and resume is unchanged (byte-identity and
-        kill/restart pytest run through this path).
-
-        State rides in memory between waves instead of store re-reads:
-        - frontier: each wave's frontier_next, persisted + counted (the
-          count doubles as the loop's emptiness gate);
-        - seen AND bloom shards: store-anchored chains of depth <= 2 —
-          right after commit N-1 joins, both re-read from the snapshot it
-          just published (exact and race-free: the read happens before the
-          next commit is submitted), then this wave's increment
-          (seen_new / new fragments) unions on top. Lineage stays shallow
-          and the zero-false-negative invariant holds: wave N+1's probe
-          sees everything seen through wave N.
-
-        Persisted handles retire TWO waves late: commit N's bloom tables
-        reference wave N-1's fragment lineage, so wave N-1's caches are
-        dropped only once commit N has joined — never while a background
-        write could still force a deep recompute.
-
-        The in-memory crawled_count is cross-checked against each joined
-        manifest — a divergence would silently shift sortorder, so it
-        raises instead."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        cfg, spark = self.cfg, self.spark
-        manifest = self.store.current_manifest()
-        n_frontier = manifest.get("counts", {}).get("frontier")
-        if n_frontier is None:  # pre-counts store (or foreign manifest)
-            n_frontier = self.store.read(spark, "frontier",
-                                         FRONTIER_SCHEMA).count()
-        crawled_count = manifest.get("crawled_count", 0)
-        frontier = self.store.read(spark, "frontier",
-                                   FRONTIER_SCHEMA).persist()
-        seen = self.store.read(spark, "seen", SEEN_SCHEMA)
-        shards, bloom_rebuild = (self._bloom_shards_df() if cfg.use_bloom
-                                 else (None, False))
-        prev: tuple | None = None  # (wave, handles, future, frontier_in)
-        retired: tuple | None = None  # handles awaiting 2-wave retirement
-
-        def _commit_timed(wv, handles, expect_count):
-            t0 = time.time()
-            m = self._commit(wv, handles, roots, expect_count)
-            self.timings.append(dict(wave=wv, step="commit",
-                                     sec=round(time.time() - t0, 3)))
-            return m
-
-        def _drop_retired():
-            nonlocal retired
-            if retired is not None:
-                rwh, rfrontier = retired
-                self._unpersist_wave(rwh)
-                rfrontier.unpersist()
-                retired = None
-
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            try:
-                while wave < cfg.max_waves and n_frontier > 0:
-                    budget = min(cfg.wave_size,
-                                 cfg.max_pages - crawled_count)
-                    if budget <= 0:
-                        break
-                    self._rotate_ckpt_dir(wave)
-                    t0 = time.time()
-                    w = self.build_wave(wave, frontier, seen, shards,
-                                        pages_prepared, robots,
-                                        domain_budgets, roots,
-                                        crawled_count, budget,
-                                        bloom_rebuild,
-                                        truncate=self._truncate)
-                    bloom_rebuild = False  # folded into this wave's commit
-                    self.timings.append(dict(
-                        wave=wave, step="plan_build",
-                        sec=round(time.time() - t0, 3)))
-                    # foreground materialization — overlaps commit N-1's IO
-                    # (the eager checkpoint runs the frontier computation,
-                    # which materializes parsed/cand/new_entries with it)
-                    with self._timed(wave, "materialize"):
-                        frontier_next = self._truncate(w["frontier_next"])
-                        w["frontier_next"] = frontier_next
-                        n_frontier_next = frontier_next.count()
-                        stat = {r["status"]: r["count"] for r in
-                                w["parsed"].groupBy("status").count()
-                                .collect()}
-                        n_crawled = stat.get("ok", 0)
-                        n_selected = sum(stat.values())
-                    if prev is not None:
-                        pw, pwh, fut, pfrontier = prev
-                        with self._timed(pw, "commit_join"):
-                            pm = fut.result()
-                        if pm["crawled_count"] != crawled_count:
-                            raise RuntimeError(
-                                f"pipelined state diverged at wave {pw}: "
-                                f"manifest crawled_count "
-                                f"{pm['crawled_count']} != in-memory "
-                                f"{crawled_count}")
-                        _drop_retired()
-                        # commit pw just joined: dirs < pw are unreadable
-                        # by any live or in-flight frame — reap them
-                        self._reap_ckpt_dirs(before_wave=pw)
-                        retired = (pwh, pfrontier)
-                        # re-anchor both chains to the just-published
-                        # snapshot (BEFORE submitting the next commit, so
-                        # the manifest is guaranteed at wave pw)
-                        seen = self.store.read(spark, "seen", SEEN_SCHEMA)
-                        if cfg.use_bloom:
-                            shards = self.store.read(spark, "bloom_shards",
-                                                     SHARD_SCHEMA)
-                    fut = pool.submit(_commit_timed, wave, w, crawled_count)
-                    prev = (wave, w, fut, frontier)
-                    # advance in-memory state for wave+1 (on top of the
-                    # anchored chains: depth <= 2 until the next anchor)
-                    frontier = frontier_next
-                    seen = seen.unionByName(w["seen_new"])
-                    if cfg.use_bloom:
-                        upd = shards.unionByName(w["new_frags"])
-                        shards = (merge_bloom_fragments(
-                                      upd, cfg.bloom_shard_bytes)
-                                  if w["bloom_replace"] is not None else upd)
-                    crawled_count += n_crawled
-                    n_frontier = n_frontier_next
-                    wave += 1
-                    if n_selected == 0:  # defensive: wave made no progress
-                        break
-            finally:
-                if prev is not None:
-                    pw, pwh, fut, pfrontier = prev
-                    with self._timed(pw, "commit_join"):
-                        fut.result()
-                    _drop_retired()
-                    self._unpersist_wave(pwh)
-                    pfrontier.unpersist()
-        frontier.unpersist()
 
     def _extracted_path(self) -> str:
         return os.path.join(self.store.root, "data", "corpus_extracted")
@@ -1186,24 +979,19 @@ class SparkCrawler:
             manifest = self.store.current_manifest()
         roots = tuple(manifest["roots"])
         wave = manifest["wave"] + 1
-        if cfg.pipeline_commits:
-            self._wave_loop_pipelined(wave, pages_prepared, robots,
-                                      domain_budgets, roots)
-        else:
-            while wave < cfg.max_waves:
-                manifest = self.store.current_manifest()
-                n_frontier = manifest.get("counts", {}).get("frontier")
-                if n_frontier is None:  # pre-counts store/foreign manifest
-                    n_frontier = self.store.read(spark, "frontier",
-                                                 FRONTIER_SCHEMA).count()
-                if n_frontier == 0:
-                    break
-                n = self.run_wave(wave, pages_prepared, robots,
-                                  domain_budgets, roots,
-                                  manifest.get("crawled_count", 0))
-                if n == 0:
-                    break
-                wave += 1
+        while wave < cfg.max_waves:
+            manifest = self.store.current_manifest()
+            n_frontier = manifest.get("counts", {}).get("frontier")
+            if n_frontier is None:  # pre-counts store/foreign manifest
+                n_frontier = self.store.read(spark, "frontier",
+                                             FRONTIER_SCHEMA).count()
+            if n_frontier == 0:
+                break
+            n = self.run_wave(wave, pages_prepared, robots, domain_budgets,
+                              roots, manifest.get("crawled_count", 0))
+            if n == 0:
+                break
+            wave += 1
         pages_prepared.unpersist()
         robots_full.unpersist()
         if self._winners is not None:
